@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Structured Streaming surface over the `events` table.
   *
@@ -203,49 +204,142 @@ object EventStreams {
     spark.table(name)
   }
 
+  // ---- the streaming-ledger family: one kernel, one step per ledger ----
+
+  private val D38 = DecimalType(38, 0)
+
+  /** The streaming-ledger kernel every `streaming*` ledger writer below
+    * is a call of: ONE AvailableNow-triggered file-source run over
+    * `landingDir`, each microbatch passed through `step(batch, batchId)`
+    * and appended to `table`. The CHECKPOINTED OFFSET LOG in
+    * `checkpointDir` is the incremental cursor — a re-run processes
+    * exactly the files that arrived since the last run's offsets, so
+    * arrival order and id space are arbitrary, and history is never
+    * re-read unless a step asks for it through [[ledgerHistory]].
+    *
+    * DELIVERY: the microbatch sink is at-least-once — a crash between a
+    * batch's append and its offset commit replays the batch and appends
+    * its rows AGAIN. Every ledger therefore keys its rows by `batch_id`
+    * (the posting ledgers by doc), and its merge view collapses
+    * duplicate deliveries (`dropDuplicates(batch_id, keys)`, a distinct,
+    * or a min/max per key) before it aggregates: read a ledger through
+    * its merge view, never a bare groupBy-sum, or a replay overcounts. A
+    * step that reads history also sees a replayed batch's first
+    * delivery, and must still emit rows its merge view collapses (the
+    * lateness ledger reads only lower batch ids, so its replay is
+    * byte-identical; the posting ledgers' max(kept) keeps the first
+    * verdict). For exactly-once at warehouse scale, land the append as
+    * a MERGE or an idempotent overwrite of a batchId-keyed partition;
+    * the single-driver AvailableNow runs here complete per call.
+    *
+    * The appends go through the cloned microbatch session, so the run
+    * ends by refreshing `table` in the CALLER's session — without it a
+    * read there sees the pre-run file listing. */
+  private[streaming] def runLedger(spark: SparkSession, landingDir: String,
+      schema: StructType, table: String, checkpointDir: String)(
+      step: (DataFrame, Long) => DataFrame): Unit = {
+    val fb: (Dataset[Row], Long) => Unit = (batch, batchId) =>
+      step(batch.toDF(), batchId)
+        .transform(compactForAppend)
+        .write.mode("append").format("parquet").saveAsTable(table)
+    val q = spark.readStream.schema(schema).parquet(landingDir).writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(fb)
+      .start()
+    try q.awaitTermination() finally q.stop()
+    if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
+  }
+
+  /** Every row of `table` appended so far, read in `batch`'s (cloned
+    * microbatch) session, or None before the table's first append. The
+    * cloned session's relation cache may hold a pre-run file listing of
+    * the ledger, so it is refreshed first: the read sees every batch
+    * appended so far, including this run's earlier ones. */
+  private[streaming] def ledgerHistory(batch: DataFrame,
+      table: String): Option[DataFrame] = {
+    val s = batch.sparkSession
+    if (!s.catalog.tableExists(table)) None
+    else {
+      s.catalog.refreshTable(table)
+      Some(s.table(table))
+    }
+  }
+
+  /** Compact a microbatch output before its ledger append (guide §6
+    * small files): the streaming engine clones the query session with
+    * AQE force-disabled (ResolveWriteToStream), so a microbatch body
+    * writing through the session's static shuffle-partition count
+    * commits that many tiny part files PER BATCH (measured: 32 ~16 KB
+    * files per x161 append — the table accretes
+    * runs × batches × partitions files that every later read must list
+    * and open). The batch queries a microbatch body runs are plain
+    * batch plans, so re-enable AQE on the cloned session and REBALANCE
+    * the append: partitions coalesce (or split) to advisory size — one
+    * file for the summary-sized appends the ledger contract documents,
+    * real volume still spreads. Content-identical, layout only. */
+  private def compactForAppend(df: DataFrame): DataFrame = {
+    df.sparkSession.conf.set("spark.sql.adaptive.enabled", "true")
+    df.hint("rebalance")
+  }
+
+  /** The compactor skeleton every batch-stamped ledger shares: the
+    * batches STRICTLY BELOW the max batch id fold through `fold` into
+    * one pre-merged row set with the ledger's columns — stamped
+    * `batch_id = -1` (a real streaming batch id is never negative), or,
+    * for the set compactor, the first asserting batch. The max-id batch
+    * is kept VERBATIM: under AvailableNow crash semantics it is the only
+    * batch a restart can re-deliver (earlier batches' offsets are
+    * committed), and a replay must land on rows with its original
+    * batch_id for the merge views' collapse to see them. Run compaction
+    * between runs (no stream active on the table), any number of times.
+    * An empty ledger comes back unchanged. Scale shape: one bounded
+    * max-id agg (1-row collect), one filter scan, then the fold. */
+  private def compactBelowMax(ledger: DataFrame)(
+      fold: DataFrame => DataFrame): DataFrame = {
+    val maxB = ledger.agg(max(col("batch_id"))).first()
+    if (maxB.isNullAt(0)) return ledger
+    val older = fold(ledger.filter(col("batch_id") < maxB.getLong(0)))
+    ledger.filter(col("batch_id") === maxB.getLong(0))
+      .unionByName(older.select(ledger.columns.map(col): _*))
+  }
+
   /** STREAMING incremental corpus dedup — the continuous-ingest twin of
     * the batch signature ledger ([[graft.operators.Dedup.dedupBatchLedger]]):
     * a file-source stream over the landing directory, each microbatch
-    * dedup'd against the accumulated ledger table's kept postings via
-    * `foreachBatch`, verdict rows appended. The CHECKPOINTED OFFSET LOG
-    * is the incremental cursor — unlike the batch formulation's
-    * max-doc-id predicate, arrival order and id space are arbitrary:
-    * a re-run processes exactly the files that arrived since the last
-    * run's offsets (Trigger.AvailableNow), history is never re-read,
-    * let alone re-shingled.
-    *
-    * Delivery: the ledger append is per-microbatch; on a mid-batch crash
-    * a retry could double-append (foreachBatch is at-least-once). For
-    * exactly-once at warehouse scale, land the append as a MERGE on doc
-    * or an idempotent overwrite of a batchId-keyed partition — the
-    * single-driver AvailableNow runs here complete atomically per call. */
+    * dedup'd against the accumulated ledger table's kept postings,
+    * verdict rows appended. Unlike the batch formulation's max-doc-id
+    * predicate, the cursor is the offset log ([[runLedger]]), so history
+    * is never re-read, let alone re-shingled. */
   def streamingDedupLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, idCol: String, textCol: String,
       n: Int = 4, numHashes: Int = 8, numBands: Int = 4): Unit = {
     import graft.operators.Dedup
-    streamingLedger(spark, landingDir, schema, ledgerTable, checkpointDir,
-      (batch, kept) => Dedup.dedupBatchLedger(batch, kept, idCol, textCol,
-        n, numHashes, numBands),
-      b0 => Dedup.minhashBandPostings(b0, idCol, textCol,
-        n, numHashes, numBands))
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, _) => Dedup.dedupBatchLedger(batch,
+        keptPostings(batch, ledgerTable, Dedup.minhashBandPostings(_,
+          idCol, textCol, n, numHashes, numBands)),
+        idCol, textCol, n, numHashes, numBands)
+    }
   }
 
   /** The embedding twin of [[streamingDedupLedger]] — the same
     * offset-log-cursored ledger over SRP band postings
     * ([[graft.operators.Dedup.embeddingDedupBatchLedger]]) instead of
     * MinHash shingles, completing the batch/streaming × text/embedding
-    * incremental-dedup matrix. */
+    * incremental-dedup matrix (driver and delivery: [[runLedger]]). */
   def streamingEmbeddingDedupLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, idCol: String, vecCol: String, dim: Int,
       numPlanes: Int = 64, numBands: Int = 8): Unit = {
     import graft.operators.Dedup
-    streamingLedger(spark, landingDir, schema, ledgerTable, checkpointDir,
-      (batch, kept) => Dedup.embeddingDedupBatchLedger(batch, kept, idCol,
-        vecCol, dim, numPlanes, numBands),
-      b0 => Dedup.srpBandPostings(b0, idCol, vecCol, dim, numPlanes,
-        numBands))
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, _) => Dedup.embeddingDedupBatchLedger(batch,
+        keptPostings(batch, ledgerTable, Dedup.srpBandPostings(_, idCol,
+          vecCol, dim, numPlanes, numBands)),
+        idCol, vecCol, dim, numPlanes, numBands)
+    }
   }
 
   /** The CONTENT-CHUNK twin of [[streamingDedupLedger]] — the same
@@ -253,76 +347,28 @@ object EventStreams {
     * ([[graft.operators.Cdc.cdcDedupBatchLedger]]), completing the
     * batch/streaming × doc-hash/embedding/chunk incremental-dedup
     * matrix: shift-robust dedup whose cursor is the file-source offset
-    * log, so arrival order and id space stay arbitrary. */
+    * log ([[runLedger]]), so arrival order and id space stay arbitrary. */
   def streamingCdcDedupLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, idCol: String, textCol: String,
       w: Int = 16, mask: Int = 63, minChunkLen: Int = 32): Unit = {
     import graft.operators.Cdc
-    streamingLedger(spark, landingDir, schema, ledgerTable, checkpointDir,
-      (batch, kept) => Cdc.cdcDedupBatchLedger(batch, kept, idCol, textCol,
-        w, mask, minChunkLen),
-      b0 => Cdc.chunkPostings(b0, idCol, textCol, w, mask, minChunkLen))
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, _) => Cdc.cdcDedupBatchLedger(batch,
+        keptPostings(batch, ledgerTable,
+          Cdc.chunkPostings(_, idCol, textCol, w, mask, minChunkLen)),
+        idCol, textCol, w, mask, minChunkLen)
+    }
   }
 
-  /** Compact a microbatch output before its ledger append (guide §6
-    * small files): the streaming engine clones the query session with
-    * AQE force-disabled (ResolveWriteToStream), so a foreachBatch body
-    * writing through the session's static shuffle-partition count
-    * commits that many tiny part files PER BATCH (measured: 32 ~16 KB
-    * files per x161 append — the table accretes
-    * runs × batches × partitions files that every later read must list
-    * and open). The batch queries a foreachBatch body runs are plain
-    * batch plans, so re-enable AQE on the cloned session and REBALANCE
-    * the append: partitions coalesce (or split) to advisory size — one
-    * file for the summary-sized appends the ledger contract documents,
-    * real volume still spreads. Content-identical, layout only. */
-  private def compactForAppend(
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    df.sparkSession.conf.set("spark.sql.adaptive.enabled", "true")
-    df.hint("rebalance")
-  }
-
-  /** Signature-agnostic streaming-ledger core: one AvailableNow run over
-    * the landing dir, each microbatch passed through `step(batch, kept)`
-    * and appended to the ledger table; `emptyPostings(batch.limit(0))`
-    * supplies the posting schema before the ledger's first append. */
-  private def streamingLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
-      checkpointDir: String,
-      step: (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
-      emptyPostings: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val s = batch.sparkSession
-        val kept =
-          if (s.catalog.tableExists(ledgerTable)) {
-            // the microbatch runs in a CLONED session whose relation cache
-            // may hold a pre-run file listing of the ledger — refresh so
-            // the history probe sees every batch appended so far
-            s.catalog.refreshTable(ledgerTable)
-            s.table(ledgerTable).filter(col("kept") && col("band") >= 0)
-          }
-          else emptyPostings(batch.limit(0).toDF())
-        step(batch.toDF(), kept)
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // the appends above went through the cloned microbatch session; the
-    // CALLER's session still caches the old ledger file listing — without
-    // this refresh a post-run read sees the pre-run row count
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+  /** A dedup posting ledger's kept postings so far — the history each
+    * microbatch is dedup'd against — or, before the ledger's first
+    * append, `emptyPostings(batch.limit(0))` for the posting schema. */
+  private def keptPostings(batch: DataFrame, table: String,
+      emptyPostings: DataFrame => DataFrame): DataFrame =
+    ledgerHistory(batch, table)
+      .map(_.filter(col("kept") && col("band") >= 0))
+      .getOrElse(emptyPostings(batch.limit(0)))
 
   /** Streaming heavy-hitters sketch LEDGER — corpus term monitoring that
     * never reprocesses history: each microbatch contributes ONE
@@ -337,47 +383,27 @@ object EventStreams {
     * increments. Per batch the appended rows are bounded by
     * tasks × capacity + 1 — sketch-sized, never corpus-sized; the one
     * collected row is the same bounded-metadata shape as the BPE merge
-    * loop's argmax row.
-    *
-    * DELIVERY: foreachBatch is at-least-once — a crash between the
-    * append and the offset commit replays the batch and appends its
-    * summary AGAIN. Every row therefore carries the streaming
-    * `batch_id`, and [[mergeSketchLedger]] collapses duplicate
-    * deliveries (`dropDuplicates(batch_id, term)`) before the pointwise
-    * sum — read the ledger through it, never a bare groupBy-sum, or a
-    * replay would overcount and break the est ≤ exact invariant the
-    * report's sketch_ok verdict asserts (the streamingDedupLedger
-    * delivery caveat, made idempotent instead of just documented). */
+    * loop's argmax row. Read it through [[mergeSketchLedger]] (delivery:
+    * [[runLedger]]) — a replay counted twice would break the
+    * est ≤ exact invariant the report's sketch_ok verdict asserts. */
   def streamingHeavyHitters(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, sketchTable: String,
-      checkpointDir: String, termCol: String, capacity: Int): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
-        val s = batch.sparkSession
+      schema: StructType, sketchTable: String,
+      checkpointDir: String, termCol: String, capacity: Int): Unit =
+    runLedger(spark, landingDir, schema, sketchTable, checkpointDir) {
+      (batch, batchId) =>
         // ONE pass over the microbatch: (n, summary) in a single row
-        val row = batch.toDF().agg(
+        val row = batch.agg(
           count(lit(1)).as("__n"),
           graft.expressions.SketchExpressions
             .misraGriesTopK(col(termCol), capacity).as("__sk")).first()
-        val n = row.getLong(0)
-        val entries = row.getSeq[org.apache.spark.sql.Row](1)
+        val entries = row.getSeq[Row](1)
           .map(e => (e.getString(0), e.getLong(1)))
+        val s = batch.sparkSession
         import s.implicits._
-        val out = ((null.asInstanceOf[String], n) +: entries).toDF("term", "est")
+        ((null.asInstanceOf[String], row.getLong(0)) +: entries)
+          .toDF("term", "est")
           .withColumn("batch_id", lit(batchId))
-        out.transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(sketchTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(sketchTable))
-      spark.catalog.refreshTable(sketchTable)
-  }
+    }
 
   /** Streaming source-drift ledger: each AvailableNow run appends the
     * micro-batch's (source, bterm, cs) bucket counts — bucketed against
@@ -385,39 +411,25 @@ object EventStreams {
     * additive, so the merged ledger telescopes to exactly the batch
     * bucket-count table and the x78 JS machinery
     * ([[graft.operators.CorpusDrift.jsFromBucketCounts]]) reports drift
-    * without ever re-reading history. Delivery is at-least-once
-    * (foreachBatch): read the ledger through [[mergeDriftLedger]], whose
-    * `dropDuplicates(batch_id, source, bterm)` collapses replays before
-    * the sum (the x72 idempotency convention). */
+    * without ever re-reading history. Read it through
+    * [[mergeDriftLedger]] (delivery: [[runLedger]]). */
   def streamingDriftLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, sourceCol: String, textCol: String,
-      vocab: Seq[String]): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      vocab: Seq[String]): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
         graft.operators.CorpusDrift
-          .bucketCountsAgainstVocab(batch.toDF(), sourceCol, textCol, vocab)
+          .bucketCountsAgainstVocab(batch, sourceCol, textCol, vocab)
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
 
   /** Idempotent merge of a [[streamingDriftLedger]]: collapse
     * at-least-once replays on (batch_id, source, bterm) — a replayed
     * batch re-appends identical count rows, so keeping any one copy is
     * exact — then sum to the (source, bterm, cs) bucket-count table
     * [[graft.operators.CorpusDrift.jsFromBucketCounts]] consumes. */
-  def mergeDriftLedger(ledger: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  def mergeDriftLedger(ledger: DataFrame): DataFrame =
     ledger.dropDuplicates("batch_id", "source", "bterm")
       .groupBy("source", "bterm").agg(sum(col("cs")).as("cs"))
 
@@ -437,38 +449,22 @@ object EventStreams {
     * distinct-value counts (the same cost the batch profiler's pass B
     * pays, paid once per increment instead of per report) — value-level
     * partials, never raw rows; a per-batch NDV cannot merge, count
-    * tables can.
-    *
-    * DELIVERY: foreachBatch is at-least-once — every row carries
-    * `batch_id`, and [[mergeProfileLedger]] collapses replays
-    * (`dropDuplicates(batch_id, slice, column_name, value)`) before
-    * summing (the x72/x84 idempotency convention). Read the ledger
-    * through it, never a bare groupBy-sum. */
+    * tables can. Read it through [[mergeProfileLedger]] (delivery:
+    * [[runLedger]]). */
   def streamingProfileLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, cols: Seq[(String, Column)],
-      slice: Column): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      slice: Column): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(slice.as("slice"),
             graft.operators.Profiler.stackedValues(cols)
               .as(Seq("column_name", "value")))
           .groupBy("slice", "column_name", "value")
           .agg(count(lit(1)).as("c"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
 
   /** Idempotent merge of a [[streamingProfileLedger]]: collapse
     * at-least-once replays on (batch_id, slice, column_name, value) — a
@@ -476,8 +472,7 @@ object EventStreams {
     * copy is exact — then sum to the per-slice (column_name, value, c)
     * count table. Feed each slice to
     * [[graft.operators.Profiler.reportFromCounts]]. */
-  def mergeProfileLedger(ledger: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  def mergeProfileLedger(ledger: DataFrame): DataFrame =
     ledger.dropDuplicates("batch_id", "slice", "column_name", "value")
       .groupBy("slice", "column_name", "value")
       .agg(sum(col("c")).as("c"))
@@ -491,63 +486,50 @@ object EventStreams {
     * per-batch top-n's (a member's rank within its batch is <= its
     * global rank) — [[mergeSampleLedger]] re-ranks only batches × n
     * candidate rows per group and telescopes to exactly the batch rule,
-    * which is what the x162 oracle asserts.
-    *
-    * DELIVERY: foreachBatch is at-least-once — a replayed batch
-    * re-appends identical (group, id) rows; the merge's candidate
-    * distinct collapses them (hash-rank sampling is idempotent BY KEY,
-    * the suppression-ledger argument). */
+    * which is what the x162 oracle asserts. A replayed batch
+    * ([[runLedger]]) re-appends identical (group, id) rows, which the
+    * merge's candidate distinct collapses (hash-rank sampling is
+    * idempotent BY KEY). */
   def streamingSampleLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, groupCol: String, idCol: String,
-      n: Int): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      n: Int): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
         graft.operators.Sampling.capPerGroup(
-          batch.toDF().select(col(groupCol), col(idCol)),
-          groupCol, idCol, n)
+          batch.select(col(groupCol), col(idCol)), groupCol, idCol, n)
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
 
   /** Merged view of a [[streamingSampleLedger]]: distinct candidates
     * (collapses replays AND cross-batch duplicate ids), then the x29
     * md5-rank cap over the bounded candidate set (<= batches × n rows
     * per group). Equals the batch rule over everything ingested. */
-  def mergeSampleLedger(ledger: org.apache.spark.sql.DataFrame,
-      groupCol: String, idCol: String, n: Int)
-      : org.apache.spark.sql.DataFrame =
+  def mergeSampleLedger(ledger: DataFrame, groupCol: String, idCol: String,
+      n: Int): DataFrame =
     graft.operators.Sampling.capPerGroup(
       ledger.select(col(groupCol), col(idCol)).distinct(),
       groupCol, idCol, n)
 
-  /** Compact a [[streamingSampleLedger]]: batches below the max id
-    * collapse to their CURRENT merged top-n as batch_id = -1 rows
-    * (candidates those rows outrank are dropped for good — they can
-    * never re-enter a pure-hash-rank top-n); the max-id batch stays
-    * verbatim (the only replay-eligible batch under AvailableNow, the
-    * compactBatchLedger contract). Lossless through
-    * [[mergeSampleLedger]], strictly shrinking once a group has more
-    * than n candidates in old batches. */
-  def compactSampleLedger(ledger: org.apache.spark.sql.DataFrame,
-      groupCol: String, idCol: String, n: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val maxId = ledger.agg(max(col("batch_id"))).first().getLong(0)
-    val pre = mergeSampleLedger(ledger.filter(col("batch_id") < maxId),
-        groupCol, idCol, n)
-      .withColumn("batch_id", lit(-1L))
-    pre.unionByName(ledger.filter(col("batch_id") === maxId))
-  }
+  /** Compact a [[streamingSampleLedger]] ([[compactBelowMax]]): older
+    * batches collapse to their CURRENT merged top-n (candidates those
+    * rows outrank are dropped for good — they can never re-enter a
+    * pure-hash-rank top-n). Lossless through [[mergeSampleLedger]],
+    * strictly shrinking once a group has more than n candidates in old
+    * batches. */
+  def compactSampleLedger(ledger: DataFrame, groupCol: String,
+      idCol: String, n: Int): DataFrame =
+    compactBelowMax(ledger)(mergeSampleLedger(_, groupCol, idCol, n)
+      .withColumn("batch_id", lit(-1L)))
+
+  /** Non-null `(u, us, id)` event rows — user, event time in epoch µs,
+    * event id — the input of the session and burstiness partials. */
+  private def userEvents(events: DataFrame, userCol: String, tsCol: String,
+      idCol: String): DataFrame =
+    events
+      .select(col(userCol).as("u"), unix_micros(col(tsCol)).as("us"),
+        col(idCol).cast("long").as("id"))
+      .filter(col("u").isNotNull && col("us").isNotNull)
 
   /** Streaming SESSION ledger — incremental sessionization (the x10
     * batch op fed batch-by-batch): each microbatch sessionizes ITS OWN
@@ -561,23 +543,19 @@ object EventStreams {
     * can only join events whose full-ordering gaps are ≤ the summary's
     * own span, and no summary ever spans a true session break (the
     * closest event pair across a break is the adjacent pair, whose gap
-    * exceeds `gapMinutes` by definition). Replays collapse on
-    * (batch_id, u, start_us).
+    * exceeds `gapMinutes` by definition). Replays ([[runLedger]])
+    * collapse on (batch_id, u, start_us).
     */
   def streamingSessionLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, userCol: String, tsCol: String,
       idCol: String, gapMinutes: Int): Unit = {
     require(gapMinutes >= 1, s"gapMinutes must be >= 1, got $gapMinutes")
     val gapUs = gapMinutes * 60000000L
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, batchId) =>
         val w = Window.partitionBy(col("u")).orderBy(col("us"), col("id"))
-        batch.toDF()
-          .select(col(userCol).as("u"), unix_micros(col(tsCol)).as("us"),
-            col(idCol).cast("long").as("id"))
-          .filter(col("u").isNotNull && col("us").isNotNull)
+        userEvents(batch, userCol, tsCol, idCol)
           .withColumn("prev", lag(col("us"), 1).over(w))
           .withColumn("is_new",
             (col("prev").isNull || col("us") - col("prev") > gapUs)
@@ -589,17 +567,7 @@ object EventStreams {
             count(lit(1)).as("n"))
           .drop("sid")
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Stitched full-corpus session summaries from a session ledger:
@@ -627,22 +595,13 @@ object EventStreams {
       .drop("island")
   }
 
-  /** Compact a session ledger: batches strictly below the max collapse
-    * to their MERGED session summaries stamped `batch_id = -1` (interval
-    * merging is associative, so merging a prefix then the rest equals
-    * merging everything — semantically lossless under
-    * [[mergeSessionLedger]]); the max-id batch stays verbatim (the only
-    * AvailableNow-replayable batch). */
-  def compactSessionLedger(ledger: DataFrame, gapMinutes: Int): DataFrame = {
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val older = mergeSessionLedger(
-      ledger.filter(col("batch_id") < maxB.getLong(0)), gapMinutes)
-      .withColumn("batch_id", lit(-1L))
-      .select(ledger.columns.map(col): _*)
-    last.unionByName(older)
-  }
+  /** Compact a session ledger ([[compactBelowMax]]): older batches
+    * collapse to their MERGED session summaries (interval merging is
+    * associative, so merging a prefix then the rest equals merging
+    * everything — semantically lossless under [[mergeSessionLedger]]). */
+  def compactSessionLedger(ledger: DataFrame, gapMinutes: Int): DataFrame =
+    compactBelowMax(ledger)(mergeSessionLedger(_, gapMinutes)
+      .withColumn("batch_id", lit(-1L)))
 
   /** Streaming BURSTINESS ledger — [[graft.operators.Burstiness]] (x185)
     * fed incrementally: each microbatch appends per-user partials
@@ -664,41 +623,61 @@ object EventStreams {
     * counted gaps the interleaved events split — and those raise; the
     * recovery is [[repairBurstinessLedger]] (replay ONLY the affected
     * users from the raw events — a semi-join-pruned pass — into one
-    * `batch_id = -1` partial each). */
+    * `batch_id = -1` partial each). Replays ([[runLedger]]) collapse on
+    * (batch_id, u, first_us). */
   def streamingBurstinessLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, userCol: String, tsCol: String,
-      idCol: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
-        val w = Window.partitionBy(col("u")).orderBy(col("us"), col("id"))
-        batch.toDF()
-          .select(col(userCol).as("u"), unix_micros(col(tsCol)).as("us"),
-            col(idCol).cast("long").as("id"))
-          .filter(col("u").isNotNull && col("us").isNotNull)
-          .withColumn("prev", lag(col("us"), 1).over(w))
-          .withColumn("g", expr("(us - prev) DIV 1000000"))
-          .groupBy(col("u"))
-          .agg(count(lit(1)).as("n"), min(col("us")).as("first_us"),
-            max(col("us")).as("last_us"),
-            coalesce(sum(col("g")), lit(0L)).as("s1"),
-            coalesce(sum((col("g") * col("g"))
-              .cast(DecimalType(38, 0))), lit(0L).cast(DecimalType(38, 0)))
-              .cast(DecimalType(38, 0)).as("s2"))
-          .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+      idCol: String): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, batchId) =>
+        burstinessPartial(userEvents(batch, userCol, tsCol, idCol), batchId)
+    }
+
+  /** Per-user gap partials `(u, n, first_us, last_us, s1, s2, batch_id)`
+    * over `(u, us, id)` event rows — a streaming batch's, or the
+    * affected users' full history in [[repairBurstinessLedger]]. */
+  private def burstinessPartial(ev: DataFrame, batchId: Long): DataFrame = {
+    val w = Window.partitionBy(col("u")).orderBy(col("us"), col("id"))
+    ev.withColumn("prev", lag(col("us"), 1).over(w))
+      .withColumn("g", expr("(us - prev) DIV 1000000"))
+      .groupBy(col("u"))
+      .agg(count(lit(1)).as("n"), min(col("us")).as("first_us"),
+        max(col("us")).as("last_us"),
+        coalesce(sum(col("g")), lit(0L)).as("s1"),
+        coalesce(sum((col("g") * col("g")).cast(D38)), lit(0L).cast(D38))
+          .cast(D38).as("s2"))
+      .withColumn("batch_id", lit(batchId))
   }
+
+  /** Burstiness ledger rows plus `b_gap`, the BOUNDARY gap in seconds
+    * from the user's previous batch interval (ordered by first_us; null
+    * for the first). Interleaving intervals cannot be stitched from
+    * partials and raise "out-of-order ingestion cannot be `<verb>`". */
+  private def withBoundaryGap(rows: DataFrame, verb: String): DataFrame = {
+    val wO = Window.partitionBy(col("u"))
+      .orderBy(col("first_us"), col("last_us"))
+    rows
+      .withColumn("prev_last", lag(col("last_us"), 1).over(wO))
+      .withColumn("b_gap",
+        when(col("prev_last").isNull, lit(null).cast("long"))
+          .otherwise(when(col("prev_last") > col("first_us"),
+            raise_error(concat(
+              lit("burstiness ledger: batch intervals interleave for user "),
+              col("u").cast("string"),
+              lit(s" — out-of-order ingestion cannot be $verb")))
+              .cast("long"))
+            .otherwise(expr("(first_us - prev_last) DIV 1000000"))))
+  }
+
+  /** s1 and s2 over [[withBoundaryGap]] rows: the within-batch gap sums
+    * plus the boundary gaps'. */
+  private def stitchedGapSums: Seq[Column] = Seq(
+    (coalesce(sum(col("s1")), lit(0L)) +
+      coalesce(sum(col("b_gap")), lit(0L))).cast("long").as("s1"),
+    (coalesce(sum(col("s2")), lit(0L).cast(D38)) +
+      coalesce(sum((col("b_gap") * col("b_gap")).cast(D38)),
+        lit(0L).cast(D38))).cast(D38).as("s2"))
 
   /** x185's report from a burstiness ledger: stitches boundary gaps
     * between consecutive batch intervals per user, then applies the
@@ -708,34 +687,16 @@ object EventStreams {
     * loudly: gap statistics cannot be stitched out of order. */
   def mergeBurstinessLedger(ledger: DataFrame, userCol: String,
       minGaps: Long = 2L): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val d38 = DecimalType(38, 0)
-    val base = ledger.dropDuplicates("batch_id", "u", "first_us")
-    val wO = Window.partitionBy(col("u"))
-      .orderBy(col("first_us"), col("last_us"))
-    val stitched = base
-      .withColumn("prev_last", lag(col("last_us"), 1).over(wO))
-      .withColumn("b_gap",
-        when(col("prev_last").isNull, lit(null).cast("long"))
-          .otherwise(when(col("prev_last") > col("first_us"),
-            raise_error(concat(
-              lit("burstiness ledger: batch intervals interleave for "),
-              lit("user "), col("u").cast("string"),
-              lit(" — out-of-order ingestion cannot be stitched")))
-              .cast("long"))
-            .otherwise(expr("(first_us - prev_last) DIV 1000000"))))
-    val agg = stitched.groupBy(col("u"))
-      .agg(sum(col("n")).cast("long").as("nn"),
-        (coalesce(sum(col("s1")), lit(0L)) +
-          coalesce(sum(col("b_gap")), lit(0L))).cast("long").as("s1"),
-        (coalesce(sum(col("s2")), lit(0L).cast(d38)) +
-          coalesce(sum((col("b_gap") * col("b_gap")).cast(d38)),
-            lit(0L).cast(d38))).cast(d38).as("s2"))
+    import org.apache.spark.sql.types.DoubleType
+    val agg = withBoundaryGap(
+        ledger.dropDuplicates("batch_id", "u", "first_us"), "stitched")
+      .groupBy(col("u"))
+      .agg(sum(col("n")).cast("long").as("nn"), stitchedGapSums: _*)
       .withColumn("n", col("nn") - 1L) // total gaps = events − 1
       .filter(col("n") >= minGaps)
     val mu = col("s1").cast(DoubleType) / col("n")
     val vard = (col("n") * col("s2") -
-      col("s1").cast(d38) * col("s1").cast(d38))
+      col("s1").cast(D38) * col("s1").cast(D38))
       .cast(DoubleType) / (col("n").cast(DoubleType) * col("n"))
     val sigma = sqrt(greatest(vard, lit(0.0)))
     agg.select(col("u").as(userCol), col("n").cast("long").as("n_gaps"),
@@ -765,8 +726,6 @@ object EventStreams {
     * backfill's blast radius, never the corpus. */
   def repairBurstinessLedger(ledger: DataFrame, events: DataFrame,
       userCol: String, tsCol: String, idCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d38 = DecimalType(38, 0)
     val base = ledger.dropDuplicates("batch_id", "u", "first_us")
     val wO = Window.partitionBy(col("u"))
       .orderBy(col("first_us"), col("last_us"))
@@ -776,64 +735,24 @@ object EventStreams {
         col("prev_last") > col("first_us"))
       .select(col("u")).distinct()
     val keep = base.join(badUsers, Seq("u"), "left_anti")
-    val w = Window.partitionBy(col("u")).orderBy(col("us"), col("id"))
-    val replayed = events
-      .select(col(userCol).as("u"), unix_micros(col(tsCol)).as("us"),
-        col(idCol).cast("long").as("id"))
-      .filter(col("u").isNotNull && col("us").isNotNull)
-      .join(badUsers, Seq("u"), "left_semi")
-      .withColumn("prev", lag(col("us"), 1).over(w))
-      .withColumn("g", expr("(us - prev) DIV 1000000"))
-      .groupBy(col("u"))
-      .agg(count(lit(1)).as("n"), min(col("us")).as("first_us"),
-        max(col("us")).as("last_us"),
-        coalesce(sum(col("g")), lit(0L)).as("s1"),
-        coalesce(sum((col("g") * col("g"))
-          .cast(d38)), lit(0L).cast(d38))
-          .cast(d38).as("s2"))
-      .withColumn("batch_id", lit(-1L))
-    keep.unionByName(replayed)
+    keep.unionByName(burstinessPartial(
+      userEvents(events, userCol, tsCol, idCol)
+        .join(badUsers, Seq("u"), "left_semi"), -1L))
   }
 
-  /** Compact a burstiness ledger: batches strictly below the max
-    * collapse to ONE stitched partial per user stamped `batch_id = -1`
-    * (boundary-gap stitching over time-ordered intervals is
-    * associative, so pre-stitching a prefix is lossless under
-    * [[mergeBurstinessLedger]]); the max-id batch stays verbatim. */
-  def compactBurstinessLedger(ledger: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d38 = DecimalType(38, 0)
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val olderRows = ledger.filter(col("batch_id") < maxB.getLong(0))
-      .dropDuplicates("batch_id", "u", "first_us")
-    val wO = Window.partitionBy(col("u"))
-      .orderBy(col("first_us"), col("last_us"))
-    val older = olderRows
-      .withColumn("prev_last", lag(col("last_us"), 1).over(wO))
-      .withColumn("b_gap",
-        when(col("prev_last").isNull, lit(null).cast("long"))
-          .otherwise(when(col("prev_last") > col("first_us"),
-            raise_error(concat(
-              lit("burstiness ledger: batch intervals interleave for "),
-              lit("user "), col("u").cast("string"),
-              lit(" — out-of-order ingestion cannot be compacted")))
-              .cast("long"))
-            .otherwise(expr("(first_us - prev_last) DIV 1000000"))))
-      .groupBy(col("u"))
-      .agg(sum(col("n")).cast("long").as("n"),
-        min(col("first_us")).as("first_us"),
-        max(col("last_us")).as("last_us"),
-        (coalesce(sum(col("s1")), lit(0L)) +
-          coalesce(sum(col("b_gap")), lit(0L))).cast("long").as("s1"),
-        (coalesce(sum(col("s2")), lit(0L).cast(d38)) +
-          coalesce(sum((col("b_gap") * col("b_gap")).cast(d38)),
-            lit(0L).cast(d38))).cast(d38).as("s2"))
-      .withColumn("batch_id", lit(-1L))
-      .select(ledger.columns.map(col): _*)
-    last.unionByName(older)
-  }
+  /** Compact a burstiness ledger ([[compactBelowMax]]): older batches
+    * collapse to ONE stitched partial per user (boundary-gap stitching
+    * over time-ordered intervals is associative, so pre-stitching a
+    * prefix is lossless under [[mergeBurstinessLedger]]). */
+  def compactBurstinessLedger(ledger: DataFrame): DataFrame =
+    compactBelowMax(ledger)(older =>
+      withBoundaryGap(older.dropDuplicates("batch_id", "u", "first_us"),
+          "compacted")
+        .groupBy(col("u"))
+        .agg(sum(col("n")).cast("long").as("n"),
+          Seq(min(col("first_us")).as("first_us"),
+            max(col("last_us")).as("last_us")) ++ stitchedGapSums: _*)
+        .withColumn("batch_id", lit(-1L)))
 
   /** Streaming KMV CARDINALITY ledger — the bounded-state distinct
     * tracker (K Minimum Values, Bar-Yossef et al., RANDOM 2002): where
@@ -845,30 +764,21 @@ object EventStreams {
     * estimates the all-time distinct count from k·batches rows —
     * then compaction ([[compactSetLedger]] on the hash; set semantics
     * apply verbatim) takes it to ~k. Per-batch state is TakeOrdered-k
-    * (k rows to the driver, never a global sort). */
+    * (k rows to the driver, never a global sort). Replays
+    * ([[runLedger]]) collapse by hash. */
   def streamingKmvLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, key: Column, k: Int): Unit = {
     require(k >= 16, s"k must be >= 16 for a usable estimate, got $k")
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(md5(key.cast("string")).as("h"))
           .filter(col("h").isNotNull)
           .distinct()
           .orderBy(col("h")).limit(k)
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Distinct-count estimate from a KMV ledger: `(k_used, n_rows,
@@ -899,64 +809,47 @@ object EventStreams {
     * `(batch_id, n_rows, batch_max_us, wm_before_us, late_rows)` where
     * `wm_before_us` is the running high-water mark (max event time over
     * all PRIOR batches — the x50 bounded-cursor pattern: a 1-row agg
-    * over the ledger, never the corpus) and `late_rows` counts this
-    * batch's rows older than `wm_before − delay` — exactly the rows a
-    * `delay`-second watermark would have dropped (the lateness model of
-    * the Dataflow paper: Akidau et al., VLDB 2015). Sentinel −1 for
-    * batch 0's undefined watermark keeps the ledger null-free.
+    * over the ledger's [[ledgerHistory]], never the corpus) and
+    * `late_rows` counts this batch's rows older than `wm_before − delay`
+    * — exactly the rows a `delay`-second watermark would have dropped
+    * (the lateness model of the Dataflow paper: Akidau et al., VLDB
+    * 2015). Sentinel −1 for batch 0's undefined watermark keeps the
+    * ledger null-free.
     *
-    * DELIVERY: at-least-once; one row per batch stamped `batch_id`,
-    * [[latenessReport]] collapses replays by batch id. Replay
-    * idempotence: `wm_before_us` is computed from ledger rows with
-    * `batch_id < this batch` only — on an at-least-once replay (crash
-    * after the parquet append but before the checkpoint commit) the
-    * re-run batch would otherwise see its OWN earlier row in the max
-    * and emit a different `(wm_before_us, late_rows)`, making the
-    * dropDuplicates in [[latenessReport]] keep an arbitrary verdict.
-    * Filtering by batch id makes every replayed row byte-identical,
-    * the stated convention for the whole ledger family. */
+    * [[latenessReport]] collapses replays ([[runLedger]]) by batch id.
+    * `wm_before_us` is computed from ledger rows with `batch_id < this
+    * batch` only: on a replay the re-run batch would otherwise see its
+    * OWN earlier row in the max and emit a different
+    * `(wm_before_us, late_rows)`, making the report's dropDuplicates
+    * keep an arbitrary verdict. */
   def streamingLatenessLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, tsCol: String, delaySeconds: Long): Unit = {
     require(delaySeconds >= 0, "delaySeconds must be >= 0")
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
-        val wmBefore: Long =
-          if (spark.catalog.tableExists(ledgerTable)) {
-            val r = spark.table(ledgerTable)
-              .filter(col("batch_id") < lit(batchId))
-              .agg(max(col("batch_max_us"))).first()
-            if (r.isNullAt(0)) -1L else r.getLong(0)
-          } else -1L
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, batchId) =>
+        val wmBefore = ledgerHistory(batch, ledgerTable)
+          .map(_.filter(col("batch_id") < lit(batchId))
+            .agg(max(col("batch_max_us"))).first())
+          .collect { case r if !r.isNullAt(0) => r.getLong(0) }
+          .getOrElse(-1L)
         val us = unix_micros(col(tsCol))
         val lateIf =
           if (wmBefore >= 0L) us < lit(wmBefore - delaySeconds * 1000000L)
           else lit(false)
-        batch.toDF()
+        batch
           .agg(count(lit(1)).as("n_rows"),
             coalesce(max(us), lit(-1L)).as("batch_max_us"),
             sum(when(lateIf, 1L).otherwise(0L)).as("late_rows"))
           .select(lit(batchId).as("batch_id"), col("n_rows"),
             col("batch_max_us"), lit(wmBefore).as("wm_before_us"),
             col("late_rows"))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-      }
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
+    }
   }
 
   /** Per-batch lateness shares + a `batch_id = -1` corpus-total row:
     * `(batch_id, n_rows, late_rows, wm_before_us, late_micro)`. */
-  def latenessReport(ledger: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  def latenessReport(ledger: DataFrame): DataFrame = {
     val batches = ledger.dropDuplicates("batch_id")
     val per = batches.select(col("batch_id"), col("n_rows"),
       col("late_rows"), col("wm_before_us"),
@@ -982,35 +875,21 @@ object EventStreams {
     * ledger instead of operator state, so deletes never force a
     * corpus re-scan and the ledger stays bounded by groups × batches
     * (then [[compactBatchLedger]] on (group → rows_delta,
-    * value_delta) collapses history).
-    *
-    * DELIVERY: at-least-once foreachBatch; every partial carries
-    * `batch_id` and [[mergeRetractionLedger]] collapses replays before
-    * summing (the x72/x84 convention). */
+    * value_delta) collapses history). Read it through
+    * [[mergeRetractionLedger]] (delivery: [[runLedger]]). */
   def streamingRetractionLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, groupCol: String, opCol: String,
-      valueCol: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      valueCol: String): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .groupBy(col(groupCol))
           .agg(sum(col(opCol).cast("long")).as("rows_delta"),
             sum(col(opCol).cast("long") * col(valueCol).cast("long"))
               .as("value_delta"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
 
   /** Net position per group from a retraction ledger: `(group,
     * live_rows, net_value)` over all groups ever seen (a fully-deleted
@@ -1018,8 +897,7 @@ object EventStreams {
     * count is a retraction with no matching insert — upstream CDC
     * corruption, never valid — and fails loudly rather than reporting
     * a nonsense position. */
-  def mergeRetractionLedger(ledger: org.apache.spark.sql.DataFrame,
-      groupCol: String): org.apache.spark.sql.DataFrame =
+  def mergeRetractionLedger(ledger: DataFrame, groupCol: String): DataFrame =
     ledger.dropDuplicates("batch_id", groupCol)
       .groupBy(col(groupCol))
       .agg(sum(col("rows_delta")).as("lr"),
@@ -1046,38 +924,21 @@ object EventStreams {
     *
     * `tokens` is any non-null integer Column over the batch rows
     * (the x08 counters, or a real tokenizer's count column upstream).
-    *
-    * DELIVERY: foreachBatch is at-least-once — every row carries
-    * `batch_id`, and [[mergeTokenLedger]] collapses replays
-    * (`dropDuplicates(batch_id, group)`) before summing (the x72/x84
-    * idempotency convention). Read the ledger through it, never a bare
-    * groupBy-sum. Compaction is the generic [[compactBatchLedger]] on
+    * Read it through [[mergeTokenLedger]] (delivery: [[runLedger]]).
+    * Compaction is the generic [[compactBatchLedger]] on
     * (group → docs, tokens). */
   def streamingTokenLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
-      checkpointDir: String, groupCol: String, tokens: Column): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) =>
-        tokenLedgerPartial(batch.toDF(), groupCol, tokens, batchId)
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+      schema: StructType, ledgerTable: String,
+      checkpointDir: String, groupCol: String, tokens: Column): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
+      (batch, batchId) => tokenLedgerPartial(batch, groupCol, tokens, batchId)
+    }
 
   /** One batch's (group, docs, tokens) partial stamped `batchId`,
     * counts multiplied by `sign` (streamingTokenLedger's microbatch
     * rows at +1; [[tokenLedgerRetraction]] emits the −1 form). */
-  def tokenLedgerPartial(batch: org.apache.spark.sql.DataFrame,
-      groupCol: String, tokens: Column, batchId: Long,
-      sign: Long = 1L): org.apache.spark.sql.DataFrame =
+  def tokenLedgerPartial(batch: DataFrame, groupCol: String, tokens: Column,
+      batchId: Long, sign: Long = 1L): DataFrame =
     batch.groupBy(col(groupCol))
       .agg((lit(sign) * count(lit(1))).as("docs"),
         (lit(sign) * sum(tokens.cast("long"))).as("tokens"))
@@ -1087,8 +948,7 @@ object EventStreams {
     * at-least-once replays on (batch_id, group) — a replayed batch
     * re-appends identical partial rows, so keeping any one copy is
     * exact — then sum to the per-group (docs, tokens) totals. */
-  def mergeTokenLedger(ledger: org.apache.spark.sql.DataFrame,
-      groupCol: String): org.apache.spark.sql.DataFrame =
+  def mergeTokenLedger(ledger: DataFrame, groupCol: String): DataFrame =
     ledger.dropDuplicates("batch_id", groupCol)
       .groupBy(col(groupCol))
       .agg(sum(col("docs")).as("docs"), sum(col("tokens")).as("tokens"))
@@ -1109,39 +969,31 @@ object EventStreams {
     * (the x170 contract — a null silently vanishing from SUM would
     * shift every downstream quantile).
     *
-    * DELIVERY: at-least-once; rows carry `batch_id` and the merge
-    * collapses replays on (batch_id, g, v) before re-aggregating (the
-    * x72/x84 idempotency convention). Compaction is the generic
+    * The merge collapses replays ([[runLedger]]) on (batch_id, g, v)
+    * before re-aggregating. Compaction is the generic
     * [[compactBatchLedger]] on ((g, v) → w) — additive, lossless. */
   def streamingQuantileLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, groupCol: String, valueCol: String,
-      weight: Column): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      weight: Column): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
-          .select(col(groupCol).as("g"),
-            when(col(valueCol).isNull, raise_error(
-              lit(s"quantile ledger: null $valueCol")))
-              .otherwise(col(valueCol)).as("v"),
-            when(weight.isNull || weight < 0, raise_error(
-              lit("quantile ledger: null/negative weight")))
-              .otherwise(weight.cast("long")).as("w"))
+        quantileCells(batch, groupCol, valueCol, weight, "quantile ledger")
           .groupBy(col("g"), col("v"))
           .agg(sum(col("w")).as("w"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
+
+  /** `(g, v, w)` quantile cells under the x170 write-time guards: a null
+    * value or a null/negative weight raises, `who` naming the writer. */
+  private def quantileCells(rows: DataFrame, groupCol: String,
+      valueCol: String, weight: Column, who: String): DataFrame =
+    rows.select(col(groupCol).as("g"),
+      when(col(valueCol).isNull, raise_error(lit(s"$who: null $valueCol")))
+        .otherwise(col(valueCol)).as("v"),
+      when(weight.isNull || weight < 0, raise_error(
+        lit(s"$who: null/negative weight")))
+        .otherwise(weight.cast("long")).as("w"))
 
   /** Signed retraction batch for a [[streamingQuantileLedger]] — the
     * HISTOGRAM member of the additive family (x215; siblings
@@ -1159,22 +1011,12 @@ object EventStreams {
     * fully-purged value's w = 0 row win a cum-weight boundary tie. */
   def quantileLedgerRetraction(raw: DataFrame, deletes: DataFrame,
       keyCol: String, groupCol: String, valueCol: String, weight: Column,
-      batchId: Long): DataFrame = {
-    require(batchId <= -2L,
-      s"retraction batchId must be <= -2 (got $batchId)")
-    raw.join(deletes.select(col(keyCol)).distinct(), Seq(keyCol),
-        "left_semi")
-      .select(col(groupCol).as("g"),
-        when(col(valueCol).isNull, raise_error(
-          lit(s"quantile retraction: null $valueCol")))
-          .otherwise(col(valueCol)).as("v"),
-        when(weight.isNull || weight < 0, raise_error(
-          lit("quantile retraction: null/negative weight")))
-          .otherwise(weight.cast("long")).as("w"))
+      batchId: Long): DataFrame =
+    quantileCells(retractedRows(raw, deletes, keyCol, batchId), groupCol,
+        valueCol, weight, "quantile retraction")
       .groupBy(col("g"), col("v"))
       .agg((-sum(col("w"))).as("w"))
       .withColumn("batch_id", lit(batchId))
-  }
 
   /** [[mergeQuantileLedger]] for a ledger carrying retraction batches:
     * collapse replays on (batch_id, g, v), NET the weights per (g, v),
@@ -1226,40 +1068,23 @@ object EventStreams {
     * CM counters are ADDITIVE (the merge is a pointwise sum), so the
     * ledger telescopes to exactly the whole-corpus sketch and the x87
     * estimate/verdict machinery holds over any number of increments.
-    *
-    * DELIVERY: foreachBatch is at-least-once — every row carries
-    * `batch_id`, and [[mergeCountMinLedger]] collapses replays
-    * (`dropDuplicates(batch_id, pos)`) before summing (the x72/x84
-    * idempotency convention). Read the ledger through it, never a bare
-    * groupBy-sum. */
+    * Read it through [[mergeCountMinLedger]] (delivery: [[runLedger]]). */
   def streamingCountMin(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, sketchTable: String,
+      schema: StructType, sketchTable: String,
       checkpointDir: String, termCol: String, depth: Int,
-      width: Int): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      width: Int): Unit =
+    runLedger(spark, landingDir, schema, sketchTable, checkpointDir) {
       (batch, batchId) =>
-        countMinPartial(batch.toDF(), termCol, depth, width, batchId)
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(sketchTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(sketchTable))
-      spark.catalog.refreshTable(sketchTable)
-  }
+        countMinPartial(batch, termCol, depth, width, batchId)
+    }
 
   /** One batch's sparse CM partial — (pos, cnt) counters plus the
     * pos = −1 row-count sentinel, stamped `batchId`, cnt multiplied by
     * `sign` (streamingCountMin's per-microbatch rows at +1;
     * [[countMinRetraction]] emits the −1 form). ONE pass over the
     * batch: (n, sketch) in a single driver row, bounded depth×width. */
-  def countMinPartial(batch: org.apache.spark.sql.DataFrame,
-      termCol: String, depth: Int, width: Int, batchId: Long,
-      sign: Long = 1L): org.apache.spark.sql.DataFrame = {
+  def countMinPartial(batch: DataFrame, termCol: String, depth: Int,
+      width: Int, batchId: Long, sign: Long = 1L): DataFrame = {
     val s = batch.sparkSession
     val row = batch.agg(
       count(lit(1)).as("__n"),
@@ -1280,8 +1105,7 @@ object EventStreams {
     * totals = single-row exact n from the pos = −1 sentinels) — the two
     * frames [[graft.operators.HeavyHitters.countMinReportFromCounters]]
     * takes. */
-  def mergeCountMinLedger(ledger: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  def mergeCountMinLedger(ledger: DataFrame): (DataFrame, DataFrame) = {
     val once = ledger.dropDuplicates("batch_id", "pos")
     (once.filter(col("pos") >= 0)
       .groupBy(col("pos")).agg(sum(col("cnt")).as("cnt")),
@@ -1297,8 +1121,7 @@ object EventStreams {
     * totals = single-row exact n from the null-term sentinels) — the
     * two frames [[graft.operators.HeavyHitters.reportFromSummary]]
     * takes. */
-  def mergeSketchLedger(ledger: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  def mergeSketchLedger(ledger: DataFrame): (DataFrame, DataFrame) = {
     val once = ledger.dropDuplicates("batch_id", "term")
     (once.filter(col("term").isNotNull)
       .groupBy(col("term")).agg(sum(col("est")).as("est")),
@@ -1310,32 +1133,20 @@ object EventStreams {
     * form); each AvailableNow run appends every microbatch's DISTINCT
     * request ids as (id, batch_id) rows, with the offset log as the
     * cursor, so already-processed request files are never re-read.
-    * Suppression is idempotent BY ID, so at-least-once delivery is safe
-    * by construction — a replayed batch re-asserts ids it already
-    * asserted; readers go through [[suppressionSet]], which collapses
-    * duplicates and keeps the FIRST asserting batch per id (the audit
-    * trail: when did this id become suppressed). */
+    * Suppression is idempotent BY ID, so at-least-once delivery
+    * ([[runLedger]]) is safe by construction — a replayed batch
+    * re-asserts ids it already asserted; readers go through
+    * [[suppressionSet]], which collapses duplicates and keeps the FIRST
+    * asserting batch per id (the audit trail: when did this id become
+    * suppressed). Compaction is [[compactSetLedger]] on the id. */
   def streamingSuppressionLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
-      checkpointDir: String, idCol: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      schema: StructType, ledgerTable: String,
+      checkpointDir: String, idCol: String): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF().select(col(idCol)).distinct()
+        batch.select(col(idCol)).distinct()
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // appends ran in the cloned microbatch session; refresh the caller's
-    // cached file listing (the streamingLedger convention)
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
 
   /** The deduplicated suppression set from a [[streamingSuppressionLedger]]
     * table: one row per suppressed id + the first batch that asserted it
@@ -1351,34 +1162,21 @@ object EventStreams {
     * the merged ledger telescopes to exactly the batch hourly frame and
     * [[graft.operators.Anomaly.spikesFromHourly]] reports identically
     * on both. Appended rows are bounded by the batch's distinct hours —
-    * time-sized, never corpus-sized. Delivery is at-least-once
-    * (foreachBatch): read through [[mergeHourlyLedger]], whose
-    * `dropDuplicates(batch_id, hour)` collapses replays before the sum
-    * (the x72 idempotency convention). */
+    * time-sized, never corpus-sized. Read it through
+    * [[mergeHourlyLedger]] (delivery: [[runLedger]]). */
   def streamingHourlyLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
+      schema: StructType, ledgerTable: String,
       checkpointDir: String, tsCol: String, typeCol: String,
-      matchType: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      matchType: String): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(date_trunc("hour", col(tsCol)).as("hour"),
             (col(typeCol) === matchType).cast("long").as("hit"))
           .groupBy("hour")
           .agg(count(lit(1)).as("n_events"), sum(col("hit")).as("n_matched"))
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
 
   /** Replay-idempotent merge of a [[streamingHourlyLedger]] table back
     * to the exact batch hourly frame. */
@@ -1393,38 +1191,20 @@ object EventStreams {
     * [[graft.operators.Dedup.compactLedger]]: the ledgers grow one
     * batch's rows per microbatch forever, so at 100 TB the postings
     * table itself becomes the scan cost even though each batch is
-    * sketch-sized. Compaction collapses every batch STRICTLY BELOW the
-    * max batch id into one pre-merged row set stamped `batch_id = -1`
-    * (a real streaming batch id is never negative), after the same
+    * sketch-sized. Compaction ([[compactBelowMax]]) collapses the older
+    * batches into one pre-merged row set after the same
     * `dropDuplicates(batch_id, keys)` replay collapse the merge views
     * apply — so the result is semantically LOSSLESS under every
     * `merge*Ledger` reader: same keys, same sums, rows bounded by
-    * distinct keys + the last batch instead of batches × keys.
-    *
-    * The max-id batch is kept VERBATIM: under AvailableNow crash
-    * semantics it is the only batch a restart can re-deliver (earlier
-    * batches' offsets are committed), and a replay must land on rows
-    * with its original batch_id for the dropDuplicates collapse to
-    * see them. Run compaction between runs (no stream active on the
-    * table), any number of times — compacting a compacted ledger is a
-    * no-op modulo row order.
-    *
-    * Scale shape: one bounded max-id agg (1-row collect), one filter
-    * scan, one keys-sized groupBy — no joins. */
+    * distinct keys + the last batch instead of batches × keys;
+    * compacting a compacted ledger is a no-op modulo row order. */
   def compactBatchLedger(ledger: DataFrame, keyCols: Seq[String],
-      sumCols: Seq[String]): DataFrame = {
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger // empty ledger: nothing to do
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val older = ledger.filter(col("batch_id") < maxB.getLong(0))
-      .dropDuplicates("batch_id" +: keyCols)
+      sumCols: Seq[String]): DataFrame =
+    compactBelowMax(ledger)(_.dropDuplicates("batch_id" +: keyCols)
       .groupBy(keyCols.map(col): _*)
       .agg(sum(col(sumCols.head)).as(sumCols.head),
         sumCols.tail.map(c => sum(col(c)).as(c)): _*)
-      .withColumn("batch_id", lit(-1L))
-      .select(ledger.columns.map(col): _*) // original column order
-    last.unionByName(older)
-  }
+      .withColumn("batch_id", lit(-1L)))
 
   /** Streaming retention-activity LEDGER — the x135 cohort triangle fed
     * incrementally (the analytics family's batch/streaming pairing,
@@ -1434,32 +1214,21 @@ object EventStreams {
     * their min active week ([[graft.operators.Retention
     * .cohortsFromActivity]]), so late history merging in simply moves
     * the min — and set union is idempotent, so at-least-once replays
-    * and cross-batch repeat activity both collapse in the merge's
-    * distinct. Appended rows are bounded by the batch's distinct
+    * ([[runLedger]]) and cross-batch repeat activity both collapse in
+    * the merge's distinct. Appended rows are bounded by the batch's distinct
     * (user, week) pairs, the same intermediate the batch op builds —
     * paid once per increment instead of per corpus re-scan. */
   def streamingRetentionLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
-      checkpointDir: String, userCol: String, tsCol: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      schema: StructType, ledgerTable: String,
+      checkpointDir: String, userCol: String, tsCol: String): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(col(userCol).as("u"),
             to_date(date_trunc("week", col(tsCol))).as("week"))
           .distinct()
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
 
   /** Merged view of a [[streamingRetentionLedger]]: the distinct
     * (u, week) activity set (collapses replays and repeat activity).
@@ -1467,22 +1236,16 @@ object EventStreams {
   def mergeActivityLedger(ledger: DataFrame): DataFrame =
     ledger.select(col("u"), col("week")).distinct()
 
-  /** Compact a SET-semantics ledger (retention activity x172, or any
-    * ledger whose merged view is a distinct over key columns): one row
+  /** Compact a SET-semantics ledger (retention activity x172, KMV
+    * x201, novelty x175, suppression x115, or any ledger whose merged
+    * view is a distinct or a first-batch min over key columns): one row
     * per key tuple across the older batches, keeping the FIRST
     * asserting batch as the audit trail (the [[suppressionSet]]
-    * convention) — except the max-id batch's rows, kept verbatim for
-    * the same replay-collapse reason as [[compactBatchLedger]]. */
-  def compactSetLedger(ledger: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val older = ledger.filter(col("batch_id") < maxB.getLong(0))
-      .groupBy(keyCols.map(col): _*)
-      .agg(min(col("batch_id")).as("batch_id"))
-      .select(ledger.columns.map(col): _*)
-    last.unionByName(older)
-  }
+    * convention); the max-id batch stays verbatim
+    * ([[compactBelowMax]]). */
+  def compactSetLedger(ledger: DataFrame, keyCols: Seq[String]): DataFrame =
+    compactBelowMax(ledger)(_.groupBy(keyCols.map(col): _*)
+      .agg(min(col("batch_id")).as("batch_id")))
 
   /** Streaming vocabulary-novelty LEDGER — x129's Heaps-law growth
     * curve fed incrementally: "how much of this batch is text we have
@@ -1493,36 +1256,25 @@ object EventStreams {
     * asserting batch is its novelty evidence, and first-batch =
     * min(batch_id) is replay-stable (a replayed batch re-appends rows
     * with the same id — the suppression-ledger x115 argument), so the
-    * merged view survives at-least-once delivery and
+    * merged view survives at-least-once delivery ([[runLedger]]) and
     * [[compactSetLedger]] compaction unchanged.
     *
     * Ledger rows are bounded by the batch's DISTINCT shingles (32-hex
     * keys, the x02 shuffle convention), the same intermediate a batch
     * Heaps fit builds — paid once per increment. */
   def streamingNoveltyLedger(spark: SparkSession, landingDir: String,
-      schema: org.apache.spark.sql.types.StructType, ledgerTable: String,
-      checkpointDir: String, textCol: String, n: Int): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(landingDir)
-    val fb: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      schema: StructType, ledgerTable: String,
+      checkpointDir: String, textCol: String, n: Int): Unit =
+    runLedger(spark, landingDir, schema, ledgerTable, checkpointDir) {
       (batch, batchId) =>
-        batch.toDF()
+        batch
           .select(explode(graft.functions.TextFunctions.shingles(
             graft.functions.TextFunctions.tokens(col(textCol)), n))
             .as("t"))
           .select(md5(col("t")).as("sh"))
           .distinct()
           .withColumn("batch_id", lit(batchId))
-          .transform(compactForAppend)
-          .write.mode("append").format("parquet").saveAsTable(ledgerTable)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(fb)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    if (spark.catalog.tableExists(ledgerTable))
-      spark.catalog.refreshTable(ledgerTable)
-  }
+    }
 
   /** Per-batch novelty from a [[streamingNoveltyLedger]]: each batch's
     * count of FIRST-SEEN shingles plus its share of the total vocabulary
@@ -1553,7 +1305,7 @@ object EventStreams {
     * output and leaves every other key's view bit-identical — the
     * per-key locality every merge view in this file has by
     * construction). Idempotent; commutes with the per-key-LOSSLESS
-    * compactors (set/session/suppression/batch — all per-key groupBys)
+    * compactors (set/session/batch — all per-key groupBys)
     * at the MERGE-VIEW level — raw rows can differ in batch-id
     * bookkeeping when the purged key owned the max batch, since the
     * compactors keep that batch verbatim as the replay cursor.
@@ -1577,6 +1329,18 @@ object EventStreams {
       keyCol: String): DataFrame =
     ledger.join(deletes.select(col(keyCol)).distinct(), Seq(keyCol),
       "left_anti")
+
+  /** The `raw` rows whose `keyCol` is on the `deletes` list (one
+    * semi-join-pruned pass) — the source a signed retraction batch is
+    * recomputed from. `batchId` must be ≤ −2 and fresh per retraction. */
+  private def retractedRows(raw: DataFrame, deletes: DataFrame,
+      keyCol: String, batchId: Long): DataFrame = {
+    require(batchId <= -2L,
+      s"retraction batchId must be <= -2 (got $batchId): -1 is the " +
+        "compaction stamp and >= 0 are live stream batches")
+    raw.join(deletes.select(col(keyCol)).distinct(), Seq(keyCol),
+      "left_semi")
+  }
 
   /** Signed RETRACTION batch for a Count-Min ledger — the takedown path
     * [[purgeLedger]] cannot take (the r15 verdict's last governance
@@ -1610,15 +1374,9 @@ object EventStreams {
     * from clean events. */
   def countMinRetraction(rawEvents: DataFrame, deletes: DataFrame,
       keyCol: String, termCol: String, depth: Int, width: Int,
-      batchId: Long): DataFrame = {
-    require(batchId <= -2L,
-      s"retraction batchId must be <= -2 (got $batchId): -1 is the " +
-        "compaction stamp and >= 0 are live stream batches")
-    countMinPartial(
-      rawEvents.join(deletes.select(col(keyCol)).distinct(), Seq(keyCol),
-        "left_semi"),
+      batchId: Long): DataFrame =
+    countMinPartial(retractedRows(rawEvents, deletes, keyCol, batchId),
       termCol, depth, width, batchId, sign = -1L)
-  }
 
   /** Signed retraction batch for a [[streamingTokenLedger]] — the
     * GROUP-TOTALS member of the additive family (docs/token counts per
@@ -1633,28 +1391,7 @@ object EventStreams {
     * fully-deleted-group convention). */
   def tokenLedgerRetraction(raw: DataFrame, deletes: DataFrame,
       keyCol: String, groupCol: String, tokens: Column,
-      batchId: Long): DataFrame = {
-    require(batchId <= -2L,
-      s"retraction batchId must be <= -2 (got $batchId)")
-    tokenLedgerPartial(
-      raw.join(deletes.select(col(keyCol)).distinct(), Seq(keyCol),
-        "left_semi"),
+      batchId: Long): DataFrame =
+    tokenLedgerPartial(retractedRows(raw, deletes, keyCol, batchId),
       groupCol, tokens, batchId, sign = -1L)
-  }
-
-  /** Compact a [[streamingSuppressionLedger]] table: one row per id,
-    * keeping the FIRST asserting batch (the audit trail [[suppressionSet]]
-    * reads through min) — except the max-id batch's rows, kept verbatim
-    * for the same replay-collapse reason as [[compactBatchLedger]].
-    * Lossless under [[suppressionSet]]: same ids, same first_batch. */
-  def compactSuppressionLedger(ledger: DataFrame, idCol: String): DataFrame = {
-    val maxB = ledger.agg(max(col("batch_id"))).first()
-    if (maxB.isNullAt(0)) return ledger
-    val last = ledger.filter(col("batch_id") === maxB.getLong(0))
-    val older = ledger.filter(col("batch_id") < maxB.getLong(0))
-      .groupBy(col(idCol))
-      .agg(min(col("batch_id")).as("batch_id"))
-      .select(ledger.columns.map(col): _*)
-    last.unionByName(older)
-  }
 }

@@ -232,7 +232,7 @@ class LedgerInvariantsSpec extends SparkSpec {
         _.filter(col("batch_id") === 0),
         l => EventStreams.suppressionSet(l, "doc_id").collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        EventStreams.compactSuppressionLedger(_, "doc_id")),
+        EventStreams.compactSetLedger(_, Seq("doc_id"))),
       Shape("dedup postings (x50/x58)", postings,
         _.filter(col("doc") >= 3L), // last appended batch
         postingViews, Dedup.compactLedger(_)),
@@ -321,12 +321,12 @@ class LedgerInvariantsSpec extends SparkSpec {
     val sp = EventStreams.purgeLedger(suplg, sdel, "doc_id")
     assert(EventStreams.suppressionSet(sp, "doc_id").collect()
       .map(_.getLong(0)).toSet == Set(11L, 13L, 14L))
-    assert(rowSet(EventStreams.compactSuppressionLedger(
-        EventStreams.purgeLedger(suplg, sdel, "doc_id"), "doc_id"))
+    assert(rowSet(EventStreams.compactSetLedger(
+        EventStreams.purgeLedger(suplg, sdel, "doc_id"), Seq("doc_id")))
       == rowSet(EventStreams.purgeLedger(
-        EventStreams.compactSuppressionLedger(suplg, "doc_id"),
+        EventStreams.compactSetLedger(suplg, Seq("doc_id")),
         sdel, "doc_id")),
-      "purge and compactSuppressionLedger do not commute")
+      "purge and compactSetLedger do not commute on the suppression ledger")
     // session ledger (x196, user-keyed interval summaries): other
     // users' merged sessions bit-identical after a user purge, and
     // purge commutes with the per-user interval-merging compactor
@@ -395,6 +395,8 @@ class LedgerInvariantsSpec extends SparkSpec {
       "idempotent, and composes with replay") {
     shapes.foreach { s =>
       val base = s.ledger()
+      assert(s.compact(base.limit(0)).count() == 0,
+        s"${s.name}: compacting an empty ledger produced rows")
       val want = s.view(base)
       val compacted = s.compact(base).localCheckpoint()
       assert(s.view(compacted) == want,

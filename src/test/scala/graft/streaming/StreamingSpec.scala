@@ -123,6 +123,40 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("StreamingTable"), e.getMessage)
   }
 
+  test("runLedger kernel: offset-log cursor, caller sees appends, " +
+      "history reads see earlier batches") {
+    import spark.implicits._
+    val landing = java.nio.file.Files.createTempDirectory("kernel_t").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("kernel_ck").toString
+    spark.sql("CREATE DATABASE IF NOT EXISTS kernelt")
+    spark.sql("DROP TABLE IF EXISTS kernelt.ledger")
+    Seq(1L, 2L).toDF("id").coalesce(1).write.mode("overwrite").parquet(landing)
+    val schema = spark.read.parquet(landing).schema
+    // trivial step: each row stamped with its batch id and with the
+    // ledger row count the step's history read saw
+    def run(): Unit = EventStreams.runLedger(spark, landing, schema,
+      "kernelt.ledger", ckpt) { (batch, batchId) =>
+      val seen = EventStreams.ledgerHistory(batch, "kernelt.ledger")
+        .fold(0L)(_.count())
+      batch.select(col("id"), lit(batchId).as("batch_id"),
+        lit(seen).as("seen"))
+    }
+    def rows(): Set[(Long, Long, Long)] =
+      spark.table("kernelt.ledger").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    run()
+    // read right after the run: no manual refresh in the caller's session
+    assert(rows() == Set((1L, 0L, 0L), (2L, 0L, 0L)))
+    Seq(3L, 4L, 5L).toDF("id").coalesce(1)
+      .write.mode("append").parquet(landing)
+    run()
+    // run 2 processed only the new file, as batch 1, and its history
+    // read saw batch 0's two rows; the caller's earlier read of the
+    // table did not leave it a stale file listing
+    assert(rows() == Set((1L, 0L, 0L), (2L, 0L, 0L),
+      (3L, 1L, 2L), (4L, 1L, 2L), (5L, 1L, 2L)))
+  }
+
   test("streaming dedup ledger: offset log is the cursor, run 2 skips run-1 files") {
     import spark.implicits._
     val landing = java.nio.file.Files.createTempDirectory("strldg_t").toString
